@@ -14,9 +14,18 @@ LocalRelation served entirely by the JVM. Doubles are rendered with
 ``repr`` and cast from string — the exact-round-trip convention used
 throughout the repo's literal expression builders — so values are
 bit-identical to what createDataFrame would have produced.
+
+Timestamps render as ``CAST('<isoformat>' AS timestamp)``. Spark reads a
+naive datetime's literal as wall-clock time in the *session* time zone
+(pinned to UTC by session.get_spark), so a naive UTC datetime stores
+the same instant on any host; an aware datetime carries its offset in
+the literal and stores its own instant. createDataFrame instead
+converts a naive datetime with the *host's* local zone (``time.mktime``).
 """
 
 from __future__ import annotations
+
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -63,6 +72,8 @@ def _sql_literal(v, typ: str) -> str:
         # repr round-trips doubles exactly; string-cast is the repo's
         # bit-exact literal convention (cf. similarity._argmax_cell_exprs)
         return f"CAST('{v!r}' AS {typ})"
+    if isinstance(v, datetime):
+        return f"CAST('{v.isoformat(sep=' ')}' AS {typ})"
     if isinstance(v, str):
         esc = v.replace("\\", "\\\\").replace("'", "\\'")
         return f"'{esc}'"
@@ -78,8 +89,8 @@ def local_rows(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """A LocalRelation with the same schema and values as
     ``spark.createDataFrame(rows, ddl)`` — but JVM-only: no Python RDD,
     no Python-worker stage on any action. ``rows`` is a non-empty list
-    of tuples of driver-side scalars (None/bool/int/float/str and
-    flat arrays thereof)."""
+    of tuples of driver-side scalars (None/bool/int/float/str/datetime
+    and flat arrays thereof)."""
     fields = _split_ddl(ddl)
     rendered = ",".join(
         "("

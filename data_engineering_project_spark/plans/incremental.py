@@ -10,8 +10,16 @@ Three layers of exactly-once, replicated faithfully:
    are staged with an anti-join against bronze (J5) and items are
    scoped to the new orders (semi-join, J6) then anti-dupped on the
    composite key (I2).
-3. **Ledger** — per-file upsert with rows_in/rows_inserted/status
-   (I4), making re-runs observable no-ops (I5).
+3. **Ledger** — one row per file with rows_in/rows_inserted/status
+   (I4), making re-runs observable no-ops (I5). A run collects its
+   rows and commits them in ONE upsert at the end of the run — also
+   when a file fails its DQ gate, so the files before it are recorded
+   before the error propagates. A process that dies before that commit
+   leaves bronze appends with no ledger rows: the next run does not
+   skip those files, re-processes them, inserts 0 rows for them
+   (layer 2 anti-joins against bronze itself, not the ledger) and logs
+   them OK with ``orders+0 items+0``. So bronze stays exactly-once;
+   only the ledger's insert counts for the crashed run are lost.
 
 Scale notes: the fingerprint is computed distributed (count + min/max
 ts + an order-insensitive sum of per-row xxhash64 — commutative, so
@@ -33,8 +41,8 @@ from pyspark.sql import functions as F
 
 from data_engineering_project_spark.operators.joins import anti_join, semi_join
 from data_engineering_project_spark.sources.control_table import (
-    LEDGER_SCHEMA,
     ControlTable,
+    ledger_records,
 )
 from data_engineering_project_spark.sources.manifest import (
     fingerprint_changed,
@@ -232,39 +240,34 @@ def replace_dimension(
     scripts/bronze_incremental.py:199-219). Returns True if replaced."""
     fp = content_fingerprint(incoming, key_col)
     if (file_name, fp) in ledger.processed_ok():
-        _log_ledger(spark, ledger, file_name, fp, 0, 0, "SKIP", "SKIP: unchanged")
+        row = _ledger_row(file_name, fp, 0, 0, "SKIP", "SKIP: unchanged")
+        ledger.upsert(ledger_records(spark, [row]))
         return False
     rows = incoming.count()
     incoming.write.mode("overwrite").parquet(bronze_dir)
-    _log_ledger(spark, ledger, file_name, fp, rows, rows, "OK", "replaced")
+    row = _ledger_row(file_name, fp, rows, rows, "OK", "replaced")
+    ledger.upsert(ledger_records(spark, [row]))
     return True
 
 
-def _log_ledger(
-    spark: SparkSession,
-    ledger: ControlTable,
+def _ledger_row(
     file_name: str,
     fingerprint: str,
     rows_in: int,
     rows_inserted: int,
     status: str,
     note: str,
-) -> None:
-    record = spark.createDataFrame(
-        [
-            (
-                file_name,
-                fingerprint,
-                datetime.now(timezone.utc).replace(tzinfo=None),
-                rows_in,
-                rows_inserted,
-                status,
-                note,
-            )
-        ],
-        LEDGER_SCHEMA,
+) -> tuple:
+    """One ledger row in LEDGER_SCHEMA order, stamped now (UTC)."""
+    return (
+        file_name,
+        fingerprint,
+        datetime.now(timezone.utc),
+        rows_in,
+        rows_inserted,
+        status,
+        note,
     )
-    ledger.upsert(record)
 
 
 def run_incremental(
@@ -279,51 +282,58 @@ def run_incremental(
 
     For each landed month file: skip if (file, fingerprint) already in
     the ledger (file-level exactly-once) → DQ gate → anti-dup append of
-    orders → semi-scoped anti-dupped append of their items → ledger
-    upsert. Idempotent: a second run over the same landing zone inserts
-    0 rows and logs SKIP.
+    orders → semi-scoped anti-dupped append of their items. The ledger
+    rows of all files are committed in one upsert when the run ends,
+    raised or not. Idempotent: a second run over the same landing zone
+    inserts 0 rows and logs SKIP.
     """
     ledger = ControlTable(spark, os.path.join(bronze_dir, "tech_processed_files"))
     done = ledger.processed_ok()
     orders_dir = os.path.join(bronze_dir, "orders")
     items_dir = os.path.join(bronze_dir, "order_items")
     results: dict[str, dict[str, int]] = {}
+    ledger_rows: list[tuple] = []
 
     month_files = sorted(
         f for f in os.listdir(landing_dir)
         if f.startswith("orders_") and f.endswith(".parquet")
     )
-    for fname in month_files:
-        batch = spark.read.parquet(os.path.join(landing_dir, fname))
-        fp = content_fingerprint(batch, spec.order_key, spec.ts_col)
-        if (fname, fp) in done:
-            _log_ledger(spark, ledger, fname, fp, 0, 0, "SKIP", "SKIP: unchanged")
-            results[fname] = {"rows_in": 0, "orders_inserted": 0, "items_inserted": 0}
-            continue
-        stats = dq_check(batch, [spec.order_key], [])
-        if os.path.exists(orders_dir):
-            existing_keys = spark.read.parquet(orders_dir).select(spec.order_key)
-            fresh = anti_join(batch, existing_keys, [spec.order_key])
-        else:
-            fresh = batch
-        # Stage new orders (TEMP TABLE equivalent, S10): the append below
-        # refreshes plans scanning orders_dir, so the anti-join must be
-        # materialized with its lineage cut first — a cache() is NOT
-        # enough (the path refresh invalidates it too).
-        fresh = fresh.localCheckpoint(eager=True)
-        n_orders = fresh.count()
-        if n_orders:
-            fresh.write.mode("append").parquet(orders_dir)
-        n_items = append_new_items(spark, items_dir, items_source, fresh, spec)
-        _log_ledger(
-            spark, ledger, fname, fp, stats["rows_in"], n_orders, "OK",
-            f"orders+{n_orders} items+{n_items}",
-        )
-        results[fname] = {
-            "rows_in": stats["rows_in"],
-            "orders_inserted": n_orders,
-            "items_inserted": n_items,
-        }
+    try:
+        for fname in month_files:
+            batch = spark.read.parquet(os.path.join(landing_dir, fname))
+            fp = content_fingerprint(batch, spec.order_key, spec.ts_col)
+            if (fname, fp) in done:
+                ledger_rows.append(_ledger_row(fname, fp, 0, 0, "SKIP", "SKIP: unchanged"))
+                results[fname] = {"rows_in": 0, "orders_inserted": 0, "items_inserted": 0}
+                continue
+            stats = dq_check(batch, [spec.order_key], [])
+            if os.path.exists(orders_dir):
+                existing_keys = spark.read.parquet(orders_dir).select(spec.order_key)
+                fresh = anti_join(batch, existing_keys, [spec.order_key])
+            else:
+                fresh = batch
+            # Stage new orders (TEMP TABLE equivalent, S10): the append below
+            # refreshes plans scanning orders_dir, so the anti-join must be
+            # materialized with its lineage cut first — a cache() is NOT
+            # enough (the path refresh invalidates it too).
+            fresh = fresh.localCheckpoint(eager=True)
+            n_orders = fresh.count()
+            if n_orders:
+                fresh.write.mode("append").parquet(orders_dir)
+            n_items = append_new_items(spark, items_dir, items_source, fresh, spec)
+            ledger_rows.append(_ledger_row(
+                fname, fp, stats["rows_in"], n_orders, "OK",
+                f"orders+{n_orders} items+{n_items}",
+            ))
+            results[fname] = {
+                "rows_in": stats["rows_in"],
+                "orders_inserted": n_orders,
+                "items_inserted": n_items,
+            }
+    finally:
+        # one commit per run, also when a file's DQ gate raised
+        if ledger_rows:
+            ledger.upsert(ledger_records(spark, ledger_rows))
     return results
 
 

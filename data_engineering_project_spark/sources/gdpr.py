@@ -15,30 +15,14 @@ sources/txlog.py so readers never see a half-erased table.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def recover_table(path: str) -> None:
-    """Recover from a crash mid-swap: if ``path`` is missing but its
-    ``.__old__`` backup exists (died between the two renames), the
-    backup is the authoritative table — rename it back. If both exist
-    (died after the swap, before the backup delete), the new table
-    was validated BEFORE the swap (erase_subjects counts the staging
-    parquet before any rename), so the stale backup is dropped."""
-    backup = path.rstrip("/") + ".__old__"
-    if os.path.exists(backup):
-        if os.path.exists(path):
-            shutil.rmtree(backup)
-        else:
-            os.rename(backup, path)
-    staging = path.rstrip("/") + ".__erase__"
-    if os.path.exists(staging):
-        # an unswapped staging write is garbage from a failed run
-        shutil.rmtree(staging)
+from data_engineering_project_spark.sources.dirswap import (
+    recover_table,
+    staging_path,
+    swap_in,
+)
 
 
 def erase_subjects(
@@ -68,21 +52,14 @@ def erase_subjects(
             "left_anti",
         )
         n_before = df.count()
-        staging = path.rstrip("/") + ".__erase__"
+        staging = staging_path(path)
         keep.write.mode("overwrite").parquet(staging)
         # Validate the staged table READS before any rename — a torn or
         # corrupt staged write must fail HERE, while the live table is
         # still untouched. After this point every on-disk state is
-        # recoverable: recover_table()'s both-exist branch may safely
-        # drop the backup because the swapped-in table was already
-        # validated pre-swap. POSIX-rename semantics only; an
-        # object-store deployment would commit through sources/txlog.py
-        # instead.
+        # recoverable (sources/dirswap.py).
         n_after = spark.read.parquet(staging).count()
-        backup = path.rstrip("/") + ".__old__"
-        os.rename(path, backup)
-        os.rename(staging, path)
-        shutil.rmtree(backup)
+        swap_in(path, staging)
         dropped[path] = n_before - n_after
     if audit_dir is not None:
         audit = spark.createDataFrame(

@@ -176,7 +176,8 @@ def compact_small_files(
     """
     import math
     import os
-    import shutil
+
+    from data_engineering_project_spark.sources.dirswap import staging_path, swap_in
 
     files = [
         os.path.join(dp, f)
@@ -190,12 +191,9 @@ def compact_small_files(
     compacted = df.coalesce(n_out)
     if sort_within_by:
         compacted = compacted.sortWithinPartitions(*sort_within_by)
-    staging = path.rstrip("/") + ".__compact__"
+    staging = staging_path(path)
     compacted.write.mode("overwrite").parquet(staging)
-    backup = path.rstrip("/") + ".__old__"
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
+    swap_in(path, staging)
     after = [
         f
         for dp, _, fs in os.walk(path)

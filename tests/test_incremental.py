@@ -4,6 +4,8 @@ reference README_FASE2.md:149-157 idempotence contract)."""
 from __future__ import annotations
 
 import os
+import time
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,7 +18,8 @@ from data_engineering_project_spark.plans.incremental import (
     replace_dimension,
     run_incremental,
 )
-from data_engineering_project_spark.sources.control_table import ControlTable
+from data_engineering_project_spark.sources import dirswap
+from data_engineering_project_spark.sources.control_table import ControlTable, ledger_records
 
 SPEC = IncrementalSpec(
     order_key="o_orderkey",
@@ -46,6 +49,31 @@ def _months(df, n):
         .collect()
     )
     return [r.m for r in rows]
+
+
+def _land_months(orders, landing, months):
+    land_monthly(
+        orders.filter(F.date_format("o_orderdate", "yyyy-MM").isin(months)),
+        "o_orderdate", "o_orderkey", landing,
+    )
+
+
+def _ledger_rows(spark, bronze):
+    """Ledger rows without processed_at, sorted by file name."""
+    ledger = ControlTable(spark, os.path.join(bronze, "tech_processed_files")).read()
+    return sorted(tuple(r) for r in ledger.drop("processed_at").collect())
+
+
+def _count_upserts(monkeypatch) -> list:
+    calls = []
+    real = ControlTable.upsert
+
+    def counting(self, records):
+        calls.append(self.path)
+        real(self, records)
+
+    monkeypatch.setattr(ControlTable, "upsert", counting)
+    return calls
 
 
 def test_landing_write_and_skip(spark, orders, tmp_path):
@@ -123,6 +151,110 @@ def test_changed_month_redelivers_only_new_rows(spark, orders, lineitem, tmp_pat
     r = run_incremental(spark, landing, bronze, SPEC, lineitem)
     assert sum(v["orders_inserted"] for v in r.values()) == 1
     assert spark.read.parquet(os.path.join(bronze, "orders")).count() == n_before + 1
+
+
+def test_run_commits_its_ledger_rows_in_one_upsert(spark, orders, lineitem, tmp_path, monkeypatch):
+    """One ledger commit per run, holding the same rows (processed_at
+    aside) a commit per file wrote: OK with rows_in, rows_inserted and
+    the insert note, then SKIP for every file on a re-run."""
+    landing = str(tmp_path / "landing")
+    bronze = str(tmp_path / "bronze")
+    _land_months(orders, landing, _months(orders, 3))
+    upserts = _count_upserts(monkeypatch)
+
+    r1 = run_incremental(spark, landing, bronze, SPEC, lineitem)
+    assert len(r1) == 3 and len(upserts) == 1
+    fps = {
+        f: content_fingerprint(spark.read.parquet(os.path.join(landing, f)), "o_orderkey", "o_orderdate")
+        for f in r1
+    }
+    assert _ledger_rows(spark, bronze) == sorted(
+        (f, fps[f], r["rows_in"], r["orders_inserted"], "OK",
+         f"orders+{r['orders_inserted']} items+{r['items_inserted']}")
+        for f, r in r1.items()
+    )
+    assert all(r["orders_inserted"] == r["rows_in"] > 0 for r in r1.values())
+
+    run_incremental(spark, landing, bronze, SPEC, lineitem)
+    assert len(upserts) == 2
+    assert _ledger_rows(spark, bronze) == sorted(
+        (f, fps[f], 0, 0, "SKIP", "SKIP: unchanged") for f in r1
+    )
+
+
+def test_dq_failure_still_commits_the_files_before_it(spark, orders, lineitem, tmp_path, monkeypatch):
+    """The k-th file failing its DQ gate re-raises, and the run's one
+    ledger commit still records files 1..k-1 (and nothing after)."""
+    landing = str(tmp_path / "landing")
+    bronze = str(tmp_path / "bronze")
+    months = _months(orders, 3)
+    month = F.date_format("o_orderdate", "yyyy-MM")
+    first_key = orders.filter(month == months[1]).agg(F.min("o_orderkey")).first()[0]
+    poisoned = orders.withColumn(
+        "o_orderkey", F.when(F.col("o_orderkey") == first_key, None).otherwise(F.col("o_orderkey"))
+    )
+    _land_months(poisoned, landing, months)
+    upserts = _count_upserts(monkeypatch)
+
+    with pytest.raises(ValueError, match="DQ violations"):
+        run_incremental(spark, landing, bronze, SPEC, lineitem)
+    assert len(upserts) == 1
+    rows = _ledger_rows(spark, bronze)
+    assert [(r[0], r[4]) for r in rows] == [(f"orders_{months[0]}.parquet", "OK")]
+    n_first = orders.filter(month == months[0]).count()
+    assert rows[0][2:4] == (n_first, n_first)
+
+
+def test_ledger_swap_crash_keeps_the_old_ledger(spark, tmp_path, monkeypatch):
+    """A crash after the live ledger is renamed aside, before the new
+    one is renamed in: the next read restores the old ledger."""
+    path = str(tmp_path / "ledger")
+    ledger = ControlTable(spark, path)
+    ts = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    ledger.upsert(ledger_records(spark, [("f1.parquet", "aaa", ts, 10, 10, "OK", "first")]))
+
+    real_rename = os.rename
+
+    def crash_on_rename_in(src, dst):
+        if src == dirswap.staging_path(path):
+            raise OSError("simulated crash after the rename-aside")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(dirswap.os, "rename", crash_on_rename_in)
+    with pytest.raises(OSError, match="simulated crash"):
+        ledger.upsert(ledger_records(spark, [("f2.parquet", "bbb", ts, 5, 5, "OK", "second")]))
+    monkeypatch.undo()
+    assert not os.path.exists(path)  # the torn state: only the backup holds the ledger
+
+    assert [(r.file_name, r.note) for r in ledger.read().collect()] == [("f1.parquet", "first")]
+    assert sorted(os.listdir(tmp_path)) == ["ledger"]  # backup and staging cleaned up
+    assert ledger.processed_ok() == {("f1.parquet", "aaa")}
+
+
+def test_ledger_processed_at_is_utc_under_any_host_zone(spark, tmp_path):
+    """The ledger stamps the UTC wall clock whatever the host's zone:
+    read back in the UTC session, processed_at reads the UTC time of
+    the write."""
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        ledger = ControlTable(spark, str(tmp_path / "ledger"))
+        dim = spark.range(3).withColumnRenamed("id", "k")
+        before = datetime.now(timezone.utc)
+        replace_dimension(spark, str(tmp_path / "dim"), dim, "k", ledger, "dim.parquet")
+        after = datetime.now(timezone.utc)
+        stamp = ledger.read().select(
+            F.date_format("processed_at", "yyyy-MM-dd HH:mm:ss").alias("t")
+        ).first().t
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    fmt = "%Y-%m-%d %H:%M:%S"
+    assert before.strftime(fmt) <= stamp <= after.strftime(fmt)
 
 
 def test_dimension_replace_on_change(spark, sf_dir, tmp_path):
