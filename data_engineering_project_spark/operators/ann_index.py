@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineering_project_spark import session_cache
 from data_engineering_project_spark.operators.similarity import (
     _assign_cells_rows,
     assign_cells,
@@ -39,26 +40,22 @@ def _cents_dir(path: str) -> str:
     return path.rstrip("/") + "/centroids"
 
 
-# Driver-side cache of the FROZEN centroid sidecar rows, keyed by
-# (applicationId, index path) — r14, guide §5. The centroids are
+# Driver-side rows of the FROZEN centroid sidecar, memoized per session
+# under ("cent_rows", index path) — r14, guide §5. The centroids are
 # immutable after build_index (append paths never rewrite them; the
 # module docstring's frozen-quantizer contract), yet every per-batch
 # probe and fold re-listed and re-collected the same ≤ a-few-hundred-row
 # table: in a streaming foreachBatch sink that was two parquet reads +
 # two collect jobs PER MICRO-BATCH for bytes the driver already held.
 # build_index invalidates on overwrite; an external writer that
-# rewrites the sidecar outside this module's API must clear the cache
+# rewrites the sidecar outside this module's API must call
+# ``session_cache.invalidate(spark, "cent_rows", path.rstrip("/"))``
 # (the same immutability assumption workload.load() documents).
-_CENT_ROWS_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _cent_rows(spark: SparkSession, path: str) -> list:
-    key = (spark.sparkContext.applicationId, path.rstrip("/"))
-    rows = _CENT_ROWS_CACHE.get(key)
-    if rows is None:
-        rows = spark.read.parquet(_cents_dir(path)).collect()
-        _CENT_ROWS_CACHE[key] = rows
-    return rows
+    return session_cache.memo(
+        spark, ("cent_rows", path.rstrip("/")),
+        lambda: spark.read.parquet(_cents_dir(path)).collect(),
+    )
 
 
 def build_index(
@@ -103,10 +100,7 @@ def build_index(
     cents.write.mode("overwrite").parquet(_cents_dir(path))
     # a rebuild at the same path (tests, refits) must not serve stale
     # frozen-centroid rows to later probes
-    _CENT_ROWS_CACHE.pop(
-        (corpus.sparkSession.sparkContext.applicationId, path.rstrip("/")),
-        None,
-    )
+    session_cache.invalidate(corpus.sparkSession, "cent_rows", path.rstrip("/"))
 
 
 def add_to_index(

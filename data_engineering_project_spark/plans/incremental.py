@@ -183,26 +183,6 @@ def dq_check(df: DataFrame, key_cols: list[str], non_negative: list[str]) -> dic
     return row
 
 
-def append_new_orders(
-    spark: SparkSession, bronze_orders_dir: str, incoming: DataFrame, spec: IncrementalSpec
-) -> int:
-    """Row-level exactly-once append of orders (I2/J5):
-    NOT EXISTS staging → append (scripts/bronze_incremental.py:274-289)."""
-    if os.path.exists(bronze_orders_dir):
-        existing_keys = spark.read.parquet(bronze_orders_dir).select(spec.order_key)
-        fresh = anti_join(incoming, existing_keys, [spec.order_key])
-    else:
-        fresh = incoming
-    # Stage before writing (the reference's TEMP TABLE, S10): appending to
-    # bronze refreshes any plan that scans it, so without cutting lineage
-    # the anti-join would re-evaluate against its own output and vanish.
-    fresh = fresh.localCheckpoint(eager=True)
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(bronze_orders_dir)
-    return n
-
-
 def append_new_items(
     spark: SparkSession,
     bronze_items_dir: str,

@@ -23,6 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_engineering_project_spark import session_cache
 from data_engineering_project_spark.functions import period_key
 from data_engineering_project_spark.localframe import local_rows
 from data_engineering_project_spark.functions import text as text_fns
@@ -70,48 +71,42 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-_CONFS_PINNED: set[str] = set()
-
-
 def _ensure_session_confs(spark: SparkSession) -> None:
     """Queries may run in a session WE did not build (the driver's
     harness constructs its own SparkSession): pin the runtime-settable
     confs our semantics depend on — nanos-parquet reads (events table)
     and UTC time semantics (dayname/period vs the DuckDB oracle).
-    Pinned once per application (r14): each conf.set is a py4j round
+    Pinned once per session (r14): each conf.set is a py4j round
     trip, and this runs on EVERY load() call (~540 sites per sweep)."""
-    app = spark.sparkContext.applicationId
-    if app in _CONFS_PINNED:
-        return
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    _CONFS_PINNED.add(app)
 
+    def pin() -> None:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
 
-# Session-memoized base-table RELATIONS (r13, guide §7.3): every
-# `spark.read.parquet(path)` call costs ~100 ms of single-threaded
-# driver work (file listing + footer schema inference) before any
-# action runs, and the registry's ~540 load() calls paid it per call
-# for immutable inputs. Memoizing the LAZY frame is plan reuse, not
-# result caching — every action still scans the parquet files; only
-# the relation construction (schema/footer) is shared, exactly what
-# `spark.table` does through a catalog entry on a real lake.
-_TABLE_FRAMES: dict[tuple[str, str, str], DataFrame] = {}
+    session_cache.memo(spark, ("session_confs",), pin)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """IMMUTABILITY ASSUMPTION (ADVICE r13): the memoized relation
+    """Session-memoized base-table RELATION (r13, guide §7.3): every
+    `spark.read.parquet(path)` call costs ~100 ms of single-threaded
+    driver work (file listing + footer schema inference) before any
+    action runs, and the registry's ~540 load() calls paid it per call
+    for immutable inputs. Memoizing the LAZY frame is plan reuse, not
+    result caching — every action still scans the parquet files; only
+    the relation construction (schema/footer) is shared, exactly what
+    `spark.table` does through a catalog entry on a real lake.
+
+    IMMUTABILITY ASSUMPTION (ADVICE r13): the memoized relation
     snapshots the table's file listing + schema at first load; a
     harness that rewrites an input dir mid-session must call
-    ``_TABLE_FRAMES.clear()`` (or use a fresh SparkSession) or the
-    cached frame will reference stale/deleted files."""
+    ``session_cache.invalidate(spark, "table", sf_dir)`` (or use a
+    fresh SparkSession) or the cached frame will reference
+    stale/deleted files."""
     _ensure_session_confs(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, table)
-    df = _TABLE_FRAMES.get(key)
-    if df is None:
-        df = read_testdata(spark, sf_dir, table)
-        _TABLE_FRAMES[key] = df
-    return df
+    return session_cache.memo(
+        spark, ("table", sf_dir, table),
+        lambda: read_testdata(spark, sf_dir, table),
+    )
 
 
 # Deterministic intermediate frames shared ACROSS queries in one
@@ -124,18 +119,11 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # pure caching of a deterministic frame, so query OUTPUTS are
 # bit-identical with and without the cache. At lake scale this is the
 # "materialize the shingle/edge table once" step of the pipeline.
-_SHARED_FRAMES: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _shared_frame(spark, sf_dir, tag, build) -> DataFrame:
-    # applicationId, not id(spark): a checkpointed frame dies with its
-    # SparkContext, and CPython can reuse a GC'd session's id()
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    df = _SHARED_FRAMES.get(key)
-    if df is None:
-        df = build().localCheckpoint(eager=True)
-        _SHARED_FRAMES[key] = df
-    return df
+    return session_cache.memo(
+        spark, ("shared", sf_dir, tag),
+        lambda: build().localCheckpoint(eager=True),
+    )
 
 
 def _copurchase_items(spark, sf_dir) -> DataFrame:
@@ -961,7 +949,6 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     only by pytest. One drain per (session, sf_dir): the rollup is a
     checkpointed shared frame."""
     import os as _os
-    import re as _sre
 
     from data_engineering_project_spark.sources.parquet import (
         normalize_nanos,
@@ -972,9 +959,7 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         src = _os.path.abspath(_os.path.join(sf_dir, "events.parquet"))
-        app = spark.sparkContext.applicationId
-        tag = _sre.sub(r"\W+", "_", sf_dir).strip("_")
-        land = f"/tmp/spark_graft_stream/{app}/{tag}/events"
+        land = session_cache.scratch_dir(spark, "stream_events", sf_dir)
         _os.makedirs(land, exist_ok=True)
         _stage_stream_source(src, land)
         raw_schema = spark.read.parquet(src).schema
@@ -982,7 +967,7 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.readStream.schema(raw_schema).parquet(land), "ts"
         )
         sess = stream_ops.session_counts_complete(stream, gap_seconds=3600)
-        name = f"stream_sess_{tag}"
+        name = f"stream_sess_{session_cache.sf_tag(sf_dir)}"
         with _stream_drain_partitions(spark):
             q = (
                 sess.writeStream.format("memory")
@@ -1036,7 +1021,6 @@ def q_streaming_sessionize_closed(spark: SparkSession, sf_dir: str) -> DataFrame
     one-batch-per-file would mean 33 table commits.) One drain per
     (session, sf_dir): the rollup is a checkpointed shared frame."""
     import os as _os
-    import re as _sre
 
     from data_engineering_project_spark.sources.parquet import (
         normalize_nanos,
@@ -1050,9 +1034,10 @@ def q_streaming_sessionize_closed(spark: SparkSession, sf_dir: str) -> DataFrame
 
     def build() -> DataFrame:
         src = _os.path.abspath(_os.path.join(sf_dir, "events.parquet"))
-        app = spark.sparkContext.applicationId
-        tag = _sre.sub(r"\W+", "_", sf_dir).strip("_")
-        land = f"/tmp/spark_graft_stream/{app}/{tag}/events_closed"
+        root = session_cache.scratch_dir(
+            spark, "stream_sessions_closed", sf_dir
+        )
+        land = root + "/events"
         _os.makedirs(land, exist_ok=True)
         _stage_stream_source(src, land)
         raw = spark.read.parquet(src)
@@ -1086,19 +1071,14 @@ def q_streaming_sessionize_closed(spark: SparkSession, sf_dir: str) -> DataFrame
         sess = stream_ops.session_counts_closed(
             stream, gap_seconds=3600, watermark="2 hours"
         )
-        table = TransactionalTable(
-            spark, f"/tmp/spark_graft_stream/{app}/{tag}/sessions_closed_tbl"
-        )
+        table = TransactionalTable(spark, root + "/table")
         with _stream_drain_partitions(spark):
             q = (
                 sess.writeStream.foreachBatch(
                     stream_ops.session_upsert_sink(table)
                 )
                 .outputMode("append")
-                .option(
-                    "checkpointLocation",
-                    f"/tmp/spark_graft_stream/{app}/{tag}/ckpt_closed",
-                )
+                .option("checkpointLocation", root + "/ckpt")
                 .trigger(availableNow=True)
                 .start()
             )
@@ -2416,7 +2396,6 @@ def q_streaming_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus scale posture of the underlying operators is carried
     by the non-streaming entries and the x10/x100 sweeps."""
     import os as _os
-    import re as _sre
 
     from data_engineering_project_spark.sources.txlog import (
         TransactionalTable,
@@ -2429,9 +2408,7 @@ def q_streaming_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") % 5 == 0
         )
-        app = spark.sparkContext.applicationId
-        tag = _sre.sub(r"\W+", "_", sf_dir).strip("_")
-        root = f"/tmp/spark_graft_stream/{app}/{tag}/vectors"
+        root = session_cache.scratch_dir(spark, "stream_vectors", sf_dir)
         index_path = root + "/index"
         src, ckpt = root + "/src", root + "/ckpt"
         cents = _ivf_cents16(spark, sf_dir)
@@ -6514,34 +6491,23 @@ def q_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ANN_INDEX_PATHS: dict = {}
-
-
 def _ann_index_path(spark, sf_dir) -> str:
     """Session-shared persisted IVF index (operators/ann_index) built
-    once per (application, sf_dir) under the SAME shared quantizer as
+    once per (session, sf_dir) under the SAME shared quantizer as
     the in-memory audits (_ivf_cents16) — the parity check must
     compare probe paths, not two different fits. Lives under the
-    system temp dir; rebuilt per session (overwrite mode)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _ANN_INDEX_PATHS.get(key)
-    if path is None:
-        import os
-        import tempfile
+    session's scratch dir; rebuilt per session (overwrite mode)."""
 
-        path = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_ann_index",
-            spark.sparkContext.applicationId,
-            os.path.basename(sf_dir.rstrip("/")),
-        )
+    def build() -> str:
+        path = session_cache.scratch_dir(spark, "ann_index", sf_dir)
         ann_index.build_index(
             load(spark, sf_dir, "embeddings"),
             path,
             centroids=_ivf_cents16(spark, sf_dir),
         )
-        _ANN_INDEX_PATHS[key] = path
-    return path
+        return path
+
+    return session_cache.memo(spark, ("ann_index", sf_dir), build)
 
 
 def _ann_index_path_near_dups(spark, sf_dir) -> str:
@@ -6563,22 +6529,14 @@ def _ann_index_path_near_dups(spark, sf_dir) -> str:
     nlist = max(16, emb.count() // 1000)
     if nlist == 16:
         return _ann_index_path(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "near_dups")
-    path = _ANN_INDEX_PATHS.get(key)
-    if path is None:
-        import os
-        import tempfile
 
-        path = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_ann_index_nd",
-            spark.sparkContext.applicationId,
-            os.path.basename(sf_dir.rstrip("/")),
-        )
+    def build() -> str:
+        path = session_cache.scratch_dir(spark, "ann_index_nd", sf_dir)
         cents = similarity.kmeans_fit(emb, k=int(nlist), iters=2)
         ann_index.build_index(emb, path, centroids=cents)
-        _ANN_INDEX_PATHS[key] = path
-    return path
+        return path
+
+    return session_cache.memo(spark, ("ann_index_nd", sf_dir), build)
 
 
 @register(
@@ -6679,10 +6637,12 @@ def q_ivfpq_index_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ann_index_path(spark, sf_dir)
     # keyed by PATH (not sf_dir) so the scaled near-dup fixture shares
     # this build whenever its path coincides with the shared index
-    key = (spark.sparkContext.applicationId, path, "pq")
-    if key not in _PQ_INDEX_BUILT:
-        ann_index.build_pq_index(spark, path, _pq_books(spark, sf_dir))
-        _PQ_INDEX_BUILT.add(key)
+    session_cache.memo(
+        spark, ("pq_index", path),
+        lambda: ann_index.build_pq_index(
+            spark, path, _pq_books(spark, sf_dir)
+        ),
+    )
     persisted_lazy = ann_index.query_pq_index(
         spark, path, queries, k=5, n_probe=4, shortlist=50
     )
@@ -6780,10 +6740,10 @@ def q_pq_near_dups_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shared 16-cell index at every driver-tested SF, constant
     # cell population at the x10/x100 rungs
     path = _ann_index_path_near_dups(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, path, "pq")
-    if key not in _PQ_INDEX_BUILT:
-        ann_index.build_pq_index(spark, path, books)
-        _PQ_INDEX_BUILT.add(key)
+    session_cache.memo(
+        spark, ("pq_index", path),
+        lambda: ann_index.build_pq_index(spark, path, books),
+    )
     new = (
         emb.filter(F.col("vec_id") % 31 == 0)
         .select(
@@ -6847,12 +6807,6 @@ def q_pq_near_dups_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_INDEX_BUILT: set = set()
-
-
-_PQ_BOOKS_CACHE: dict = {}
-
-
 def _pq_books(spark, sf_dir) -> list:
     """Session-shared PQ codebooks (m=4 subspaces, k=16 codewords, one
     Lloyd iteration from the deterministic lowest-id init shared with
@@ -6864,17 +6818,12 @@ def _pq_books(spark, sf_dir) -> list:
     three SFs — near-random vectors don't reward extra subspaces) at
     ~a third of the fit cost, so the registered entry buys its audit
     as cheaply as the quality allows."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    books = _PQ_BOOKS_CACHE.get(key)
-    if books is None:
-        books = pq_ops.pq_train(
+    return session_cache.memo(
+        spark, ("pq_books", sf_dir),
+        lambda: pq_ops.pq_train(
             load(spark, sf_dir, "embeddings"), m=4, k=16, iters=1
-        )
-        _PQ_BOOKS_CACHE[key] = books
-    return books
-
-
-_PQ_BOOK_ROWS_CACHE: dict = {}
+        ),
+    )
 
 
 def _pq_book_rows(spark, sf_dir) -> list:
@@ -6884,12 +6833,10 @@ def _pq_book_rows(spark, sf_dir) -> list:
     job per subspace per entry for identical values (guide §5). The
     frames stay available via _pq_books for consumers that need a
     DataFrame (the sidecar write in build_pq_index)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    rows = _PQ_BOOK_ROWS_CACHE.get(key)
-    if rows is None:
-        rows = [b.collect() for b in _pq_books(spark, sf_dir)]
-        _PQ_BOOK_ROWS_CACHE[key] = rows
-    return rows
+    return session_cache.memo(
+        spark, ("pq_book_rows", sf_dir),
+        lambda: [b.collect() for b in _pq_books(spark, sf_dir)],
+    )
 
 
 def _pq_dim(books: list) -> int:
@@ -18105,33 +18052,23 @@ def q_zorder3_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_TABLES: dict = {}
-
-
 def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Session-shared bucketed orders/lineitem pair (sources/bucketed):
-    built once per (application, sf_dir) — the write-once shuffle that
+    built once per (session, sf_dir) — the write-once shuffle that
     buys every later join on the key its co-location. External tables
-    under the system temp dir; catalog names carry the sf tag so two
-    scale factors never collide inside one session."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    names = _BUCKETED_TABLES.get(key)
-    if names is None:
+    under the session's scratch dir; catalog names carry the sf tag so
+    two scale factors never collide inside one session."""
+
+    def build() -> tuple[str, str]:
         import os
         import re as _re2
-        import tempfile
 
         from data_engineering_project_spark.sources import bucketed
 
         tag = _re2.sub(
             r"[^0-9a-zA-Z]+", "_", os.path.basename(sf_dir.rstrip("/"))
         )
-        base = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_bucketed",
-            spark.sparkContext.applicationId,
-            tag,
-        )
+        base = session_cache.scratch_dir(spark, "bucketed", sf_dir)
         ot, lt = f"sg_orders_bkt_{tag}", f"sg_lineitem_bkt_{tag}"
         bucketed.write_bucketed(
             load(spark, sf_dir, "orders"),
@@ -18147,8 +18084,9 @@ def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             "l_orderkey",
             n_buckets=8,
         )
-        _BUCKETED_TABLES[key] = names = (ot, lt)
-    return names
+        return ot, lt
+
+    return session_cache.memo(spark, ("bucketed", sf_dir), build)
 
 
 @register(
@@ -18259,25 +18197,13 @@ def q_bucketed_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DPP_FACT_PATHS: dict = {}
-
-
 def _dpp_fact_path(spark: SparkSession, sf_dir: str) -> str:
     """Session-shared month-partitioned orders fact (hive-style
     ``order_month=YYYY-MM`` directories) — the layout dynamic
-    partition pruning needs. Built once per (application, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _DPP_FACT_PATHS.get(key)
-    if path is None:
-        import os
-        import tempfile
+    partition pruning needs. Built once per (session, sf_dir)."""
 
-        path = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_dpp_fact",
-            spark.sparkContext.applicationId,
-            os.path.basename(sf_dir.rstrip("/")),
-        )
+    def build() -> str:
+        path = session_cache.scratch_dir(spark, "dpp_fact", sf_dir)
         (
             load(spark, sf_dir, "orders")
             .withColumn(
@@ -18287,8 +18213,9 @@ def _dpp_fact_path(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("order_month")
             .parquet(path)
         )
-        _DPP_FACT_PATHS[key] = path
-    return path
+        return path
+
+    return session_cache.memo(spark, ("dpp_fact", sf_dir), build)
 
 
 @register(

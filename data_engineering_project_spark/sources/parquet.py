@@ -12,20 +12,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet scan (glob-capable). Column pruning and predicate pushdown
     are delegated to Catalyst — callers should ``select``/``filter`` on
@@ -64,14 +50,6 @@ def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if table == "events":
         df = normalize_nanos(df, "ts")
     return df
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (serving/SQL surface)."""
-    for table in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{table}.parquet")
-        if os.path.exists(path):
-            read_parquet(spark, path).createOrReplaceTempView(table)
 
 
 def write_parquet(

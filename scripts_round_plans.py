@@ -1,11 +1,12 @@
-"""Capture .explain('formatted') for named queries into plans/r13/.
+"""Capture .explain('formatted') for named queries into plans/<round>/.
 
-Usage: python scripts_r13_plans.py before|after query [query ...]
+Usage: python scripts_round_plans.py ROUND before|after query [query ...]
 
-Writes plans/r13/<query>_<tag>.txt. Parity/audit-style queries do their
-heavy work in builder-internal actions; for those the declared frame's
-plan is still captured (it is what the driver runs), and operator-level
-plans are captured separately where OPTIMIZATION_r13.md says so.
+Writes plans/<round>/<query>_<tag>.txt (e.g. ROUND = r14). Parity/audit-style
+queries do their heavy work in builder-internal actions; for those the
+declared frame's plan is still captured (it is what a registry caller runs), and
+operator-level plans are captured separately where the round's
+OPTIMIZATION_<round>.md says so.
 """
 
 from __future__ import annotations
@@ -20,13 +21,13 @@ from data_engineering_project_spark.session import get_spark
 
 
 def main() -> int:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    round_, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     assert tag in ("before", "after"), tag
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r13")
+    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", round_)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("r13-plans")
+    spark = get_spark(f"{round_}-plans")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         fn = workload.QUERIES.get(name)
